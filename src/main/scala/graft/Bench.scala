@@ -1,51 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // openCostInBytes stays at Spark's 4 MB default HERE (r14 verdict
-      // #2): a session-wide 128 KB lowered maxSplitBytes' floor for every
-      // regular parquet scan — invisible at local[4] but a ~+10% per-key
-      // regression at local[32], where bytes-per-core is small and the
-      // open cost IS the floor. The many-small-files fix lives scoped in
-      // Multimodal.ingestSession (only binaryFile listings see 128 KB).
-      //
-      // opt-r15: respect AQE's advisory partition size when coalescing
-      // instead of stopping at defaultParallelism (the Spark-docs
-      // recommendation). With the default parallelismFirst=true every
-      // tiny reduce stage keeps ~defaultParallelism partitions, so at 32
-      // cores each small shuffle runs 32 micro-tasks of pure scheduling
-      // overhead (measured: a uniform per-key tax, e.g.
-      // source_overlap_matrix 1.08 s at local[32] vs 0.29 s at local[4]
-      // on identical data). At cluster scale the same setting yields the
-      // 64 MB-advisory-sized reduce partitions guide §2.2 calls for —
-      // this is NOT a local-only tune; map-stage parallelism still scales
-      // with cores.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // …with the advisory target parameterised: 8 MB locally (A/B'd —
-      // 64 MB over-coalesces medium shuffles to 1 task and costs the keys
-      // with real post-shuffle compute their parallelism at 32 cores,
-      // e.g. dedup_cluster_lsh 1.74 → 2.40 s; 8 MB keeps KB-sized
-      // shuffles at 1 task and ~50-100 MB shuffles at 6-12). On a
-      // cluster set SPARK_GRAFT_ADVISORY to 64m-256m per guide §2.2 —
-      // the right value tracks executor memory per core, not this host.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "8m"))
-      // opt-r15: preferSortMergeJoin=false (allow shuffled-hash join) was
-      // A/B'd with an interleaved full-bench pair at local[32]/sf0.1 and
-      // measured WORSE (75.3/76.0 s default vs 78.3/85.0 s with the flag):
-      // the surface's joins are broadcast- or tiny-partition-shaped, where
-      // SHJ's per-partition hash build only adds overhead. Left at the
-      // Spark default.
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession("graft-bench", cpus)
     // ERROR, not WARN: analysis-time deprecation warnings land immediately
     // before the JSON line in the log the driver tail-captures
     spark.sparkContext.setLogLevel("ERROR")
@@ -80,16 +38,16 @@ object Bench {
     } catch { case _: Throwable => }
     // untimed warmup #2: run the whole query surface once at the smallest SF
     // so codegen compilation, agg-buffer classes, the Catalyst SQL parser and
-    // window/LSH code paths are JIT-hot before timing starts (pipeline result
-    // caches are keyed by sfDir, so nothing computed here is reused below).
+    // window/LSH code paths are JIT-hot before timing starts (memo entries
+    // are keyed by input path, so nothing computed here is reused below).
     // The keys run CONCURRENTLY through a small pool — Spark actions are
     // thread-safe, sf0.001 jobs are planning-dominated, and every
     // side-effectful key is already concurrency-clean (sinks/writes use
-    // UUID temp dirs, fixture + memo builds go through computeIfAbsent,
-    // stream keys are batch twins with no shared state dir). Serial, this
-    // pass was the bulk of warmup_sec (57-144 s across r7/r8 artifacts);
-    // the TIMED passes below stay strictly serial so per-key numbers keep
-    // their meaning.
+    // UUID temp dirs, fixture + memo builds are graft.Memo's single-flight
+    // builds, stream keys are batch twins with no shared state dir).
+    // Serial, this pass was the bulk of warmup_sec (57-144 s across r7/r8
+    // artifacts); the TIMED passes below stay strictly serial so per-key
+    // numbers keep their meaning.
     val warmDir = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
     if (warmDir.isDirectory && warmDir.getPath != sfDir) {
       // parse defensively: warmup must never sink the bench, so a
@@ -136,8 +94,9 @@ object Bench {
     // samples only, so a key that throws fast in one pass cannot shadow its
     // real cost from the pass that completed (a fast failure would
     // otherwise win the min — worse contamination than the noise min-of-2
-    // exists to remove). A key with zero successful passes reports its min
-    // elapsed anyway (the canary spec catches always-failing keys first).
+    // exists to remove). A key with zero successful passes has no time: it
+    // is named in the total line's "failed" list, left out of the total,
+    // and fails the run.
     // dev-loop filter, mirroring graft.Verify's: SPARK_GRAFT_ONLY=k1,k2
     // times only the named keys. The driver never sets it; when active the
     // JSON carries "filtered":true so a filtered run can never masquerade
@@ -158,11 +117,11 @@ object Bench {
       name -> (((System.nanoTime() - t0) / 1e9, ok))
     }
     val passes = (1 to benchRuns).map(_ => timedPass())
-    val results = passes.head.map { case (name, _) =>
-      val samples = passes.map(_(name))
-      val good = samples.filter(_._2).map(_._1)
-      name -> (if (good.nonEmpty) good.min else samples.map(_._1).min)
-    }
+    val results = passes.head.keys.flatMap { name =>
+      val good = passes.map(_(name)).filter(_._2).map(_._1)
+      if (good.nonEmpty) Some(name -> good.min) else None
+    }.toMap
+    val failed = passes.head.keys.filterNot(results.contains).toSeq.sorted
     // keep the JSON line short (3-decimal times, basename sf): the driver
     // captures only the tail of the sbt log, and a >2 KB line gets truncated
     // past recognition (round-1 BENCH had parsed=null for exactly this reason)
@@ -229,7 +188,9 @@ object Bench {
     val hq = headline.flatMap(k => results.get(k).map(v => s"\"" + k + "\":" + fmt2(v)))
       .mkString("{", ",", "}")
     val perkeyField = if (perkeyWritten) s""","perkey_file":"$perkeyFile"""" else ""
-    println(s"""{"metric":"total",$filteredField$stampFields"value":${fmt(total)},"unit":"sec","queries":$hq,"sf":"$sfName","nqueries":${results.size},"runs":$benchRuns$perkeyField,"loadavg_before":"$loadBefore","loadavg_after":"${loadavg()}"}""")
+    val failedField = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    println(s"""{"metric":"total",$filteredField$stampFields"value":${fmt(total)},"unit":"sec","queries":$hq,"sf":"$sfName","nqueries":${results.size},"n_failed":${failed.size},"failed":$failedField,"runs":$benchRuns$perkeyField,"loadavg_before":"$loadBefore","loadavg_after":"${loadavg()}"}""")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

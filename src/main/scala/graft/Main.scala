@@ -2,7 +2,6 @@ package graft
 
 import graft.pipeline.AnalysisPipeline
 import graft.report.ReportExporter
-import org.apache.spark.sql.SparkSession
 
 /** CLI entry point — the analog of the reference's `python -m src.cli`
   * (cli.py:11-137): run the advisor, print the partition scripts, export the
@@ -68,16 +67,8 @@ object Main {
       }
     }
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-advisor")
-      .getOrCreate()
+    val spark = GraftSession("graft-advisor",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"), sys.env.get("SPARK_MASTER"))
     spark.sparkContext.setLogLevel("WARN")
 
     try {

@@ -28,7 +28,7 @@ object Queries10 {
     * three consumers: the weights, the max scalar and the totals scalar. */
   private[graft] def mixtureAllocPlan(s: SparkSession, dir: String): DataFrame = {
     val d = "decimal(38,0)"
-    val ps = graft.ext.DfMemo.cached(s, Some(dir), "mixture_ps",
+    val ps = Memo.frame(s, Some(dir), "mixture_ps",
       persistUnkeyed = true) {
       t(s, dir, "documents")
         .select(col("source"), size(split(col("text"), " ")).cast("long").as("n_tok"))
@@ -118,7 +118,7 @@ object Queries10 {
       // embedding_pca_power replay discipline.
       (s, dir) => {
         import s.implicits._
-        val feat = graft.ext.DfMemo.cached(s, Some(dir), "logreg_feat",
+        val feat = Memo.frame(s, Some(dir), "logreg_feat",
           persistUnkeyed = true) {
           QualityModel.features(t(s, dir, "documents"))
         }
@@ -155,7 +155,7 @@ object Queries10 {
       // containment 1.0 vs jaccard ≈0.97; a 10%-prefix quote scores ≈1.0
       // vs ≈0.1 — the case this metric exists for). Same inverted-index
       // candidate shape as dedup_ngram_jaccard — the shingle frame is
-      // DfMemo-shared with it — and the ratio is integer-exact through
+      // Memo-shared with it — and the ratio is integer-exact through
       // ExactMath (count / min(count), a rational that CAN sit on a
       // rounding half-boundary, unlike irrational cosines).
       (s, dir) => Dedup.exactContainment(s, t(s, dir, "documents"),
@@ -243,7 +243,7 @@ object Queries10 {
       // renderer, the pcaOracleCtes discipline). One grouped aggregation
       // over O(bins) groups; pos_rate integer-exact through ExactMath.
       (s, dir) => {
-        val feat = graft.ext.DfMemo.cached(s, Some(dir), "logreg_feat",
+        val feat = Memo.frame(s, Some(dir), "logreg_feat",
           persistUnkeyed = true) {
           QualityModel.features(t(s, dir, "documents"))
         }

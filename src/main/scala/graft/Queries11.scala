@@ -37,7 +37,7 @@ object Queries11 {
     * three times per plan — measured 4.5 s → 1.0 s at sf1 for
     * doc_ppl_bigram alone (the memoizedSignatures double-compute class). */
   private def pplBigramsMemo(s: SparkSession, dir: String): DataFrame =
-    graft.ext.DfMemo.cached(s, Some(dir), "ppl_bigrams") {
+    Memo.frame(s, Some(dir), "ppl_bigrams") {
       // opt-r15: word bigrams ARE the 2-shingle kernel output for docs of
       // ≥ 2 tokens (the guard excludes the kernel's whole-text collapse),
       // so the interpreted transform+concat runs as one codegen pass
@@ -165,7 +165,7 @@ object Queries11 {
         // memoized + persisted: the totals scalar and the weight frame
         // both derive from this vocabulary-sized count — without the cache
         // AQE may or may not reuse the underlying corpus scan between them
-        val tc = graft.ext.DfMemo.cached(s, Some(dir), "dsirtc") {
+        val tc = Memo.frame(s, Some(dir), "dsirtc") {
           toks.groupBy("tok").agg(
             sum(when(col("is_ref"), 1L).otherwise(0L)).as("ct"),
             sum(when(!col("is_ref"), 1L).otherwise(0L)).as("cc"))
@@ -221,7 +221,7 @@ object Queries11 {
       // bigram string key.
       (s, dir) => {
         val bi = pplBigramsMemo(s, dir)
-        val c12 = graft.ext.DfMemo.cached(s, Some(dir), "ppl_bigram_types") {
+        val c12 = Memo.frame(s, Some(dir), "ppl_bigram_types") {
           bi.groupBy("bg").agg(count(lit(1)).as("c12"))
         }
         val c1 = c12.groupBy(substring_index(col("bg"), " ", 1).as("w1"))
@@ -465,7 +465,7 @@ object Queries11 {
       (s, dir) => {
         // memoized + persisted: three consumers below (per-source totals,
         // corpus counts, the scored join) read this vocabulary-sized frame
-        val cst = graft.ext.DfMemo.cached(s, Some(dir), "srctokcnt") {
+        val cst = Memo.frame(s, Some(dir), "srctokcnt") {
           t(s, dir, "documents")
             .select(col("source"), explode(split(col("text"), " ")).as("tok"))
             .groupBy("source", "tok").agg(count(lit(1)).as("c"))
@@ -527,7 +527,7 @@ object Queries11 {
       (s, dir) => {
         // memoized + persisted: the per-source sizes and BOTH sides of the
         // inverted-index self-join read this distinct-shingle frame
-        val sh = graft.ext.DfMemo.cached(s, Some(dir), "srcshingle") {
+        val sh = Memo.frame(s, Some(dir), "srcshingle") {
           // opt-r15: one-pass DistinctShingleHashes kernel (no shingle
           // strings materialize; values bit-identical — see Queries6's
           // span_shh note)

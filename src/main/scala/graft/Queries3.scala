@@ -92,7 +92,7 @@ object Queries3 {
       (s, dir) => {
         // the labels frame is memoized: cluster_keep_policy consumes the
         // SAME star-contraction over the same jaccard pairs — one iterative
-        // clustering pass serves both keys (the DfMemo sketch discipline)
+        // clustering pass serves both keys (the Memo.frame sketch discipline)
         Dedup.jaccardClustersMemo(s, dir)
       },
       Some(

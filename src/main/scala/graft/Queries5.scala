@@ -305,7 +305,7 @@ object Queries5 {
       (s, dir) => {
         // bucketing is a ONE-TIME layout investment (exactly what the
         // advisor's scripts produce); materialize it once per (session,
-        // fixture dir) — same contract as DfMemo's sketch passes — so the
+        // fixture dir) — same contract as Memo.frame sketch passes — so the
         // steady state this key measures is the exchange-free JOIN, not a
         // repeated table rewrite. Switching dirs re-materializes.
         Queries5.synchronized {

@@ -186,7 +186,7 @@ object Queries7 {
       // most central to its near-dup neighborhood". Scale shape: each
       // iteration is one shuffle join on the src id + one grouped sum;
       // rank state is O(nodes) and lives in executors, never the driver.
-      // The edge PAIR SET is memoized (DfMemo): the rank recurrence
+      // The edge PAIR SET is memoized (Memo.frame): the rank recurrence
       // references the edge list in every iteration's subtree, and without
       // materialization Catalyst would re-run the ANN join ~2×iters times
       // inside the one final plan.

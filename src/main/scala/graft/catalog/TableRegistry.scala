@@ -23,21 +23,11 @@ object TableRegistry {
 
   def path(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
 
-  // DataFrames are immutable logical plans — cache per (session, path) so
-  // repeated queries don't re-list files / re-read parquet footers.
-  private val dfCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    dfCache.computeIfAbsent((spark, path(sfDir, name)),
-      { case (s, p) => normalizeTs(s.read.parquet(p)) })
-
-  /** Drop this session's cached frames — long-lived JVMs cycling sessions
-    * would otherwise pin stopped sessions (and their plans) forever via the
-    * map's strong references. Mirrors DfMemo.clear / SimSearch.clear. */
-  def clear(spark: SparkSession): Unit = {
-    val it = dfCache.entrySet().iterator()
-    while (it.hasNext) if (it.next().getKey._1 eq spark) it.remove()
+  /** The fixture table's DataFrame, memoized per (session, file identity) so
+    * repeated queries don't re-list files / re-read parquet footers. */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val p = path(sfDir, name)
+    graft.Memo(spark, "table", Seq(p))(normalizeTs(spark.read.parquet(p)))
   }
 
   /** Boundary normalization of the `events.ts` column to the engine-wide

@@ -62,42 +62,15 @@ object Bpe {
     concat(lit(SEP),
       array_join(regexp_extract_all(p, lit("."), lit(0)), SEP2), lit(SEP))
 
-  /** (merge table, final (p, n_syms) vocabulary) memo — the training loop
-    * is a deterministic driver-side fold over vocab-sized jobs, so the
-    * train key and the encode key (X63) share ONE run per (session,
-    * fixture, nMerges) instead of each paying the full loop (the
-    * [[SimSearch]] centroidMemo discipline). Stopped-session entries are
-    * swept on access like [[DfMemo]]'s. */
-  private val trainMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), (DataFrame, DataFrame)]()
-
-  /** Drop this session's training memos (the [[DfMemo.clear]] sibling). */
-  def clear(spark: SparkSession): Unit = {
-    val it = trainMemo.entrySet().iterator()
-    while (it.hasNext) if (it.next().getKey._1 eq spark) it.remove()
-  }
-
+  /** (merge table, final (p, n_syms) vocabulary) of one training run —
+    * the loop is a deterministic driver-side fold over vocab-sized jobs, so
+    * the train key and the encode key (X63) share ONE run per (session,
+    * corpus, nMerges) through [[graft.Memo]] instead of each paying the
+    * full loop. */
   private def trained(spark: SparkSession, docs: DataFrame, nMerges: Int,
-      cacheKey: Option[String]): (DataFrame, DataFrame) = {
-    val it = trainMemo.entrySet().iterator()
-    while (it.hasNext) if (it.next().getKey._1.sparkContext.isStopped) it.remove()
-    def compute: (DataFrame, DataFrame) = trainLoop(spark, docs, nMerges)
-    cacheKey match {
-      case Some(k) =>
-        val key = (spark, k, nMerges)
-        val existing = trainMemo.get(key)
-        if (existing != null) existing
-        else {
-          // unlike DfMemo's lazy persist, the loop RUNS here (driver fold) —
-          // a concurrent duplicate build wastes work but stays correct, and
-          // the putIfAbsent loser adopts the winner's frames
-          val built = compute
-          val prev = trainMemo.putIfAbsent(key, built)
-          if (prev != null) prev else built
-        }
-      case None => compute
-    }
-  }
+      cacheKey: Option[String]): (DataFrame, DataFrame) =
+    cacheKey.fold(trainLoop(spark, docs, nMerges))(k =>
+      graft.Memo(spark, s"bpe_train:$nMerges", Seq(k))(trainLoop(spark, docs, nMerges)))
 
   private def trainLoop(spark: SparkSession, docs: DataFrame, nMerges: Int)
       : (DataFrame, DataFrame) = {
@@ -230,7 +203,7 @@ object Bpe {
     import org.apache.spark.sql.expressions.Window
     val vocab = trained(spark, docs, nMerges, cacheKey)._2 // (p, s, n_syms)
     // the vocab-sized window is an index-build step, not a corpus window
-    val symIds = DfMemo.cached(spark, cacheKey, s"bpe_symids:$nMerges") {
+    val symIds = graft.Memo.frame(spark, cacheKey, s"bpe_symids:$nMerges") {
       vocab.select(explode(symbols(col("s"))).as("sym")).distinct()
         .withColumn("tok_id",
           row_number().over(Window.orderBy("sym")).cast("long"))

@@ -200,7 +200,7 @@ object Dedup {
       distinctShingles(col("text"), shingleW).as("sh"))
       .withColumn("sig", minhashPolySignature(col("sh"), k))
 
-  /** [[signatureFrame]] materialized through DfMemo: the k-aggregate
+  /** [[signatureFrame]] materialized through Memo.frame: the k-aggregate
     * signature projection typically feeds several branches (band self-join
     * sides, verification joins, recall audits); without materialization
     * Catalyst inlines it into each branch and recomputes it ~10× —
@@ -209,7 +209,7 @@ object Dedup {
     * the classic "materialize the sketch pass" step. */
   def memoizedSignatures(spark: SparkSession, docs: DataFrame, shingleW: Int,
       k: Int, cacheKey: Option[String]): DataFrame =
-    DfMemo.cached(spark, cacheKey, s"minhash_sh:$shingleW:$k",
+    graft.Memo.frame(spark, cacheKey, s"minhash_sh:$shingleW:$k",
       persistUnkeyed = true) {
       signatureFrame(docs, shingleW, k)
     }
@@ -240,7 +240,7 @@ object Dedup {
     * (gkey, rid, gsz, sh, sig). */
   def groupedSignatures(spark: SparkSession, docs: DataFrame, shingleW: Int,
       k: Int, cacheKey: Option[String]): DataFrame =
-    DfMemo.cached(spark, cacheKey, s"minhash_grp:$shingleW:$k",
+    graft.Memo.frame(spark, cacheKey, s"minhash_grp:$shingleW:$k",
       persistUnkeyed = true) {
       memoizedSignatures(spark, docs, shingleW, k, cacheKey)
         .withColumn("gkey", shingleSetKey(col("sh")))
@@ -254,7 +254,7 @@ object Dedup {
   /** (doc_id, gkey) membership of [[groupedSignatures]]'s groups. */
   def signatureMembers(spark: SparkSession, docs: DataFrame, shingleW: Int,
       k: Int, cacheKey: Option[String]): DataFrame =
-    DfMemo.cached(spark, cacheKey, s"minhash_mem:$shingleW:$k",
+    graft.Memo.frame(spark, cacheKey, s"minhash_mem:$shingleW:$k",
       persistUnkeyed = true) {
       memoizedSignatures(spark, docs, shingleW, k, cacheKey)
         .select(col("doc_id"), shingleSetKey(col("sh")).as("gkey"))
@@ -391,7 +391,7 @@ object Dedup {
     * stays the declarative set-intersect form). */
   def exactJaccard(spark: SparkSession, docs: DataFrame, shingleW: Int,
       threshold: Double, idCap: Long, cacheKey: Option[String] = None): DataFrame = {
-    val sh = DfMemo.cached(spark, cacheKey, s"jaccard_sh:$shingleW:$idCap",
+    val sh = graft.Memo.frame(spark, cacheKey, s"jaccard_sh:$shingleW:$idCap",
       persistUnkeyed = true) {
       docs.where(col("doc_id") < idCap)
         .select(col("doc_id"), distinctShingles(col("text"), shingleW).as("sh"))
@@ -418,7 +418,7 @@ object Dedup {
     * prefix-truncated near-dups: containment 1.0 vs jaccard ≈0.97; a
     * 10%-prefix quote: ≈1.0 vs ≈0.1). Candidate generation is the same
     * inverted-index equi-join as [[exactJaccard]] — never all-pairs — and
-    * deliberately shares its DfMemo key, so a pipeline running both
+    * deliberately shares its Memo.frame key, so a pipeline running both
     * metrics pays for ONE shingle pass. Unlike the irrational cosines,
     * count/min(count) is a rational that can sit exactly on a rounding
     * half-boundary, so the ratio goes through [[ExactMath.ratioRounded]],
@@ -426,7 +426,7 @@ object Dedup {
     * [[exactJaccard]]. */
   def exactContainment(spark: SparkSession, docs: DataFrame, shingleW: Int,
       threshold: Double, idCap: Long, cacheKey: Option[String] = None): DataFrame = {
-    val sh = DfMemo.cached(spark, cacheKey, s"jaccard_sh:$shingleW:$idCap",
+    val sh = graft.Memo.frame(spark, cacheKey, s"jaccard_sh:$shingleW:$idCap",
       persistUnkeyed = true) {
       docs.where(col("doc_id") < idCap)
         .select(col("doc_id"), distinctShingles(col("text"), shingleW).as("sh"))
@@ -481,7 +481,7 @@ object Dedup {
     * `dedup_cluster` surfaces it directly and `cluster_keep_policy` ranks
     * within it, so ONE iterative star-contraction pass serves both keys. */
   def jaccardClustersMemo(spark: SparkSession, dir: String): DataFrame =
-    DfMemo.cached(spark, Some(dir), "jaccclusters") {
+    graft.Memo.frame(spark, Some(dir), "jaccclusters") {
       val docs = graft.catalog.TableRegistry.table(spark, dir, "documents")
       val pairs = exactJaccard(spark, docs, shingleW = 3,
         threshold = 0.2, idCap = 500, cacheKey = Some(dir)).select("a_id", "b_id")
@@ -678,7 +678,7 @@ object Dedup {
     * the DuckDB oracle (still the raw-doc banding form) computes. */
   def simhashNearDups(spark: SparkSession, docs: DataFrame, maxDist: Int = 3,
       cacheKey: Option[String] = None): DataFrame = {
-    val sigs = DfMemo.cached(spark, cacheKey, "simhash_sigs", persistUnkeyed = true) {
+    val sigs = graft.Memo.frame(spark, cacheKey, "simhash_sigs", persistUnkeyed = true) {
       docs
         .select(col("doc_id"), tokenHashes61(split(col("text"), " ")).as("hashes"))
         .select(col("doc_id"), simhashFromHashes(col("hashes")).as("sig"))

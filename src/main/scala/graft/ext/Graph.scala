@@ -39,12 +39,10 @@ object Graph {
     // truncation (RDD-level blocks, GC-reclaimed when the result frame is
     // dropped) instead of persistUnkeyed: a CacheManager persist here is
     // keyed by LOGICAL PLAN, so unpersisting it at the end of an unkeyed
-    // call could evict a KEYED call's identical shared entry (the exact
-    // cross-eviction hazard DfMemo documents for the putIfAbsent loser) —
-    // and never unpersisting it leaked one entry per call (r8s3 review).
+    // call could evict a KEYED call's identical shared entry — and never unpersisting it leaked one entry per call (r8s3 review).
     val degPlan = edges.groupBy("s").agg(count(lit(1)).as("deg"))
     val deg = cacheKey match {
-      case Some(_) => DfMemo.cached(spark, cacheKey, s"prdeg$pairsTag")(degPlan)
+      case Some(_) => graft.Memo.frame(spark, cacheKey, s"prdeg$pairsTag")(degPlan)
       case None => Dedup.truncate(degPlan)
     }
     var rank = deg.select(col("s").as("id"), col("deg"), lit(1000000L).as("rank"))

@@ -247,29 +247,6 @@ object Multimodal {
       col("text").cast("binary").as("media")).as[MediaRecord]
   }
 
-  /** Per-(session, dir, glob) memo of the LISTED ingest dataset — the
-    * plan object only, deliberately NOT persisted: reusing the plan reuses
-    * the InMemoryFileIndex inside its LogicalRelation, so repeated ingest
-    * calls skip the directory re-listing (measured: ~5 s of the sf1
-    * multimodal keys' 6.9 s was re-listing the 50k-file fixture corpus
-    * per invocation — decode itself is ~1.5 s), while every ACTION still
-    * scans and decodes the payload bytes for real. At 100 TB the listing
-    * is exactly what a catalog/manifest layer caches; the bytes are not.
-    * Stopped-session entries swept on access (the DfMemo discipline). */
-  private val listingMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), Dataset[MediaRecord]]()
-
-  /** Drop `spark`'s cached listings (the [[DfMemo.clear]] /
-    * [[graft.ext.Bpe.clear]] sibling — r14 advice): files added to or
-    * removed from an ingest directory mid-session are invisible to the
-    * memoized plan's InMemoryFileIndex until the listing is re-built, so
-    * tests and long-lived sessions need an invalidation hook. Keyed on the
-    * PARENT session (the memo key), not the internal ingest session. */
-  def clearListing(spark: SparkSession): Unit = {
-    val it = listingMemo.entrySet().iterator()
-    while (it.hasNext) if (it.next().getKey._1 eq spark) it.remove()
-  }
-
   /** Small-file open cost for the ingest session, in bytes: Spark's 4 MB
     * default models HDFS seek cost and over-counts a local/NVMe small file
     * ~30×, shredding a many-small-files scan into thousands of near-empty
@@ -290,15 +267,12 @@ object Multimodal {
     * it, so frames built here keep small-file packing wherever they are
     * consumed, while every other scan in the parent session keeps Spark's
     * default. */
-  private val ingestSessionMemo = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession, SparkSession]()
-
   private def ingestSession(spark: SparkSession): SparkSession =
-    ingestSessionMemo.computeIfAbsent(spark, { parent =>
-      val s = parent.newSession()
+    graft.Memo(spark, "ingest-session", Nil) {
+      val s = spark.newSession()
       s.conf.set("spark.sql.files.openCostInBytes", ingestOpenCostBytes.toString)
       s
-    })
+    }
 
   /** Real ingestion path: a directory of raw media FILES → MediaRecord, via
     * Spark's built-in `binaryFile` source (how media actually lands in a
@@ -308,19 +282,15 @@ object Multimodal {
     * file on the driver — at 100 TB this is the bulk-ingest scan that
     * [[extractFeatures]] runs directly on top of. */
   def mediaFromBinaryFiles(spark: SparkSession, dir: String,
-      glob: String = "*"): Dataset[MediaRecord] = {
-    val it = listingMemo.entrySet().iterator()
-    while (it.hasNext) if (it.next().getKey._1.sparkContext.isStopped) it.remove()
-    val sit = ingestSessionMemo.entrySet().iterator()
-    while (sit.hasNext) if (sit.next().getKey.sparkContext.isStopped) sit.remove()
-    val existing = listingMemo.get((spark, dir, glob))
-    if (existing != null) existing
-    else {
-      val built = mediaFromBinaryFilesUncached(spark, dir, glob)
-      val prev = listingMemo.putIfAbsent((spark, dir, glob), built)
-      if (prev != null) prev else built
-    }
-  }
+      glob: String = "*"): Dataset[MediaRecord] =
+    // memoized per (session, glob, dir identity): the plan object only,
+    // deliberately NOT persisted — reusing the plan reuses the
+    // InMemoryFileIndex inside its LogicalRelation, so repeated ingest calls
+    // skip Spark's re-listing (measured: ~5 s of the sf1 multimodal keys'
+    // 6.9 s was re-listing the 50k-file fixture corpus per invocation),
+    // while every ACTION still scans and decodes the payload bytes. Files
+    // added to or removed from `dir` change its identity and rebuild it.
+    graft.Memo(spark, s"binaryFiles:$glob", Seq(dir))(mediaFromBinaryFilesUncached(spark, dir, glob))
 
   private def mediaFromBinaryFilesUncached(parent: SparkSession, dir: String,
       glob: String): Dataset[MediaRecord] = {
@@ -534,37 +504,7 @@ object Multimodal {
       bos.toByteArray
     }
 
-    private val cache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-    /** Per-(fixtureKey, docs plan, input-file signature) memo of the
-      * population manifest, so a cache-hit `ensure` call runs no Spark job
-      * at all (pre-r8 it re-ran the count/min/max aggregation on every call
-      * just to build the tag). The key combines the analyzed plan's
-      * semantic hash with each input file's (path, length, mtime): a
-      * fixture REGENERATED AT THE SAME PATH within one JVM changes the
-      * signature and misses the memo — preserving the stale-corpus guard
-      * the manifest exists for (the events.ts precedent), which a
-      * plan-hash-only key would have silently defeated (r8 review
-      * finding). Plans with no resolvable input files (in-memory frames)
-      * skip the memo and always re-count. */
-    private val manifestCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-    private def inputSignature(docs: DataFrame): Option[String] = {
-      val files = docs.inputFiles
-      if (files.isEmpty) None
-      else Some {
-        val conf = docs.sparkSession.sessionState.newHadoopConf()
-        files.sorted.map { f =>
-          val p = new org.apache.hadoop.fs.Path(f)
-          try {
-            val st = p.getFileSystem(conf).getFileStatus(p)
-            s"$f:${st.getLen}:${st.getModificationTime}"
-          } catch { case _: java.io.IOException => s"$f:?" }
-        }.mkString("|").hashCode.toString
-      }
-    }
-
-    /** Materialize (once per fixture dir per JVM) the PNG corpus for `docs`
+    /** Materialize (once per session and fixture population) the PNG corpus for `docs`
       * and return its directory — the input to [[mediaFromBinaryFiles]].
       *
       * The corpus population (count, min id, max id) is part of the
@@ -579,15 +519,18 @@ object Multimodal {
           .collect()(0)
         s"${pop.getLong(0)}_${pop.getLong(1)}_${pop.getLong(2)}"
       }
-      val manifest = inputSignature(docs) match {
-        case Some(sig) =>
-          val manifestKey =
-            s"$fixtureKey#${docs.queryExecution.analyzed.semanticHash()}#$sig"
-          manifestCache.computeIfAbsent(manifestKey, _ => computeManifest())
-        case None => computeManifest()
-      }
+      // the manifest is memoized per (fixtureKey, docs plan, input files'
+      // identity), so a cache-hit `ensure` runs no Spark job at all; a
+      // fixture REGENERATED AT THE SAME PATH misses and re-counts, which
+      // keeps the stale-corpus guard the manifest exists for. Plans with no
+      // input files (in-memory frames) always re-count.
+      val spark = docs.sparkSession
+      val files = docs.inputFiles.toSeq.sorted
+      val manifest = if (files.isEmpty) computeManifest() else graft.Memo(spark,
+        s"png-manifest:$fixtureKey:${docs.queryExecution.analyzed.semanticHash()}",
+        files)(computeManifest())
       val tag = s"${fixtureKey.replaceAll("[^A-Za-z0-9._-]", "_")}_$manifest"
-      cache.computeIfAbsent(tag, { _ =>
+      graft.Memo(spark, s"png-fixtures:$tag", Nil) {
         // executors write into executor-local java.io.tmpdir and the driver
         // renames the staging dir — correct ONLY when driver and executors
         // share a filesystem. Guard it: on a non-local master this would
@@ -622,7 +565,7 @@ object Multimodal {
           }
         }
         out.getAbsolutePath
-      })
+      }
     }
   }
 }

@@ -139,16 +139,13 @@ object SimSearch {
     math.max(8, math.min(30, ceilLog2))
   }
 
-  private def memoized(spark: SparkSession, cacheKey: Option[String], tag: String)
-      (build: => DataFrame): DataFrame = DfMemo.cached(spark, cacheKey, tag)(build)
-
   /** The ANN pair set of the fixture embeddings table, materialized once
     * per (session, dir) — consumed by simjoin_ann's downstream keys (the
     * PageRank recurrence references it in every iteration's subtree) and
     * warmed untimed by Bench like the pipeline's profile caches. Single
     * definition so call sites can't drift on the LSH parameters. */
   def annPairsMemo(spark: SparkSession, dir: String): DataFrame =
-    DfMemo.cached(spark, Some(dir), "annpairs") {
+    graft.Memo.frame(spark, Some(dir), "annpairs") {
       val emb = graft.catalog.TableRegistry.table(spark, dir, "embeddings")
       // truncate lineage, not just persist: the banded projection's LOGICAL
       // plan carries nBands·r 64-literal weight arrays, and the PageRank
@@ -184,10 +181,10 @@ object SimSearch {
   def annSelfJoin(spark: SparkSession, emb: DataFrame, dim: Int,
       rPlanes: Int, nBands: Int, threshold: Double,
       cacheKey: Option[String] = None): DataFrame = {
-    val e = memoized(spark, cacheKey, s"ann:$dim:$rPlanes:$nBands") {
+    val e = graft.Memo.frame(spark, cacheKey, s"ann:$dim:$rPlanes:$nBands") {
       withNorm(emb)
     }
-    val banded = memoized(spark, cacheKey, s"annbands:$dim:$rPlanes:$nBands") {
+    val banded = graft.Memo.frame(spark, cacheKey, s"annbands:$dim:$rPlanes:$nBands") {
       e.select(col("vec_id"),
         explode(array((0 until nBands).map(b =>
           struct(lit(b).as("band"),
@@ -208,38 +205,6 @@ object SimSearch {
       .orderBy("a_id", "b_id")
   }
 
-  /** IVF-style top-k: deterministic "centroids" (the first nCentroids
-    * vectors by vec_id — a k-means iteration would refine these; seeding is
-    * enough to demonstrate the index shape); assignment rides the shared
-    * broadcast-centroid [[argminAssign]]; the query probes its nProbe
-    * nearest centroids and brute-forces only those clusters.
-    *
-    * 100 TB posture: assignment is scan-parallel; the probe filter prunes
-    * (nCentroids-nProbe)/nCentroids of the corpus before any distance math;
-    * the per-cluster layout would be a partitionBy("cluster") write.
-    */
-  /** Collected-centroid memo — the seeding collect is deterministic per
-    * (source, n), so repeated index builds (ivfTopK + kmeans over the same
-    * fixture dir) share one n × dim matrix instead of re-running the
-    * top-n scan per call. */
-  private val centroidMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), Array[(Int, Array[Double])]]()
-
-  /** Drop every driver-side memo owned by `spark` — the centroid matrices
-    * here AND the persisted frames in [[DfMemo]] (one call frees both; a
-    * long-lived JVM cycling sessions would otherwise pin stopped sessions
-    * and their n × dim matrices forever). */
-  def clear(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val it = centroidMemo.entrySet().iterator()
-    while (it.hasNext) if (it.next().getKey._1 eq spark) it.remove()
-    val sit = sizeMemo.entrySet().iterator()
-    while (sit.hasNext) if (sit.next().getKey._1 eq spark) sit.remove()
-    DfMemo.clear(spark)
-  }
-
-  private val sizeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Long]()
-
   /** Corpus-scaled cluster count k = max(8, n div 256): SemDeDup-style
     * clustering keeps the EXPECTED cluster size constant (~256) as the
     * corpus grows, so within-cluster pairwise work stays O(n · 256), never
@@ -255,11 +220,7 @@ object SimSearch {
     * ([[scaledK]], [[scaledPlanes]]) — memoized per (session, corpus) so
     * repeated index builds over one fixture cost one metadata-sized job. */
   def corpusSize(emb: DataFrame, cacheKey: Option[String] = None): Long =
-    cacheKey match {
-      case Some(k) =>
-        sizeMemo.computeIfAbsent((emb.sparkSession, k), _ => emb.count())
-      case None => emb.count()
-    }
+    cacheKey.fold(emb.count())(k => graft.Memo(emb.sparkSession, "corpussize", Seq(k))(emb.count()))
 
   /** (ci, cv, c2) centroid index frame for the corpus-scaled assignment:
     * the first `k` nonzero-norm vectors by vec_id, indexed 0..k−1 in
@@ -280,11 +241,7 @@ object SimSearch {
         .withColumn("ci",
           (row_number().over(Window.orderBy("vec_id")) - 1).cast("int"))
         .select(col("ci"), col("v").as("cv"), dot(col("v"), col("v")).as("c2"))
-    cacheKey match {
-      case Some(ck) =>
-        DfMemo.cached(emb.sparkSession, Some(s"$ck:k$k"), "centroidframe")(build)
-      case None => build
-    }
+    graft.Memo.frame(emb.sparkSession, cacheKey, s"centroidframe:k$k")(build)
   }
 
   /** [[centroidFrame]] from an in-memory centroid matrix (the k-means loop's
@@ -355,11 +312,7 @@ object SimSearch {
     // this frame from BOTH sides and the stats key reads it again — one
     // k-literal projection pass serves all of them (at 100 TB the
     // equivalent is materializing the assignment once at index-build time)
-    cacheKey match {
-      case Some(ck) =>
-        DfMemo.cached(emb.sparkSession, Some(s"$ck:k$k"), "clusterassign")(build)
-      case None => build
-    }
+    graft.Memo.frame(emb.sparkSession, cacheKey, s"clusterassign:k$k")(build)
   }
 
   /** Pair-side cap for [[semanticDedup]]: a cluster over this size splits
@@ -525,17 +478,16 @@ object SimSearch {
     * are driver MATH only — the IVF probe ranking (n = 16 distances
     * against one query), the PQ codebook (n = 4 slices), and the k-means
     * seed matrix; corpus-side assignment always goes through the broadcast
-    * [[argminAssign]], never through literals built from this. */
+    * [[argminAssign]], never through literals built from this. Memoized
+    * per (session, corpus, n): ivfTopK and kmeans over one corpus share one
+    * matrix. */
   def seedCentroids(emb: DataFrame, n: Int, cacheKey: Option[String] = None)
       : Array[(Int, Array[Double])] = {
     def compute: Array[(Int, Array[Double])] =
       withNorm(emb).orderBy("vec_id").limit(n).collect()
         .zipWithIndex
         .map { case (r, i) => (i, r.getSeq[Double](1).toArray) }
-    cacheKey match {
-      case Some(k) => centroidMemo.computeIfAbsent((emb.sparkSession, k, n), _ => compute)
-      case None => compute
-    }
+    cacheKey.fold(compute)(k => graft.Memo(emb.sparkSession, s"seedcentroids:$n", Seq(k))(compute))
   }
 
   /** One full k-means iteration over the corpus: E-step assigns every
@@ -626,24 +578,14 @@ object SimSearch {
     (v, lam)
   }
 
-  /** Memoized pcaTop results — the power iteration is a deterministic
-    * driver-side fold (a handful of small aggregate jobs), so
-    * embedding_pca_power and embedding_abtt share ONE run per
-    * (session, dir, iters) instead of each paying the full chain (the
-    * centroidMemo discipline). */
-  private val pcaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), (Array[Double], Double, Array[Double])]()
-
   /** [[pcaTopComponent]] plus the corpus mean it already computed — the
     * internal form [[abttTopK]] builds on (ABTT needs μ for the centering,
-    * and recomputing it would be a redundant pass). */
+    * and recomputing it would be a redundant pass). Memoized per (session,
+    * corpus, iters): embedding_pca_power and embedding_abtt share one run. */
   private[graft] def pcaTop(spark: SparkSession, emb: DataFrame, iters: Int = 3,
       cacheKey: Option[String] = None): (Array[Double], Double, Array[Double]) =
-    cacheKey match {
-      case Some(k) => pcaMemo.computeIfAbsent((spark, k, iters),
-        _ => pcaTopCompute(spark, emb, iters))
-      case None => pcaTopCompute(spark, emb, iters)
-    }
+    cacheKey.fold(pcaTopCompute(spark, emb, iters))(k =>
+      graft.Memo(spark, s"pca:$iters", Seq(k))(pcaTopCompute(spark, emb, iters)))
 
   private def pcaTopCompute(spark: SparkSession, emb: DataFrame, iters: Int)
       : (Array[Double], Double, Array[Double]) = {
@@ -747,6 +689,16 @@ object SimSearch {
       .limit(k)
   }
 
+  /** IVF-style top-k: deterministic "centroids" (the first nCentroids
+    * vectors by vec_id — a k-means iteration would refine these; seeding is
+    * enough to demonstrate the index shape); assignment rides the shared
+    * broadcast-centroid [[argminAssign]]; the query probes its nProbe
+    * nearest centroids and brute-forces only those clusters.
+    *
+    * 100 TB posture: assignment is scan-parallel; the probe filter prunes
+    * (nCentroids-nProbe)/nCentroids of the corpus before any distance math;
+    * the per-cluster layout would be a partitionBy("cluster") write.
+    */
   def ivfTopK(spark: SparkSession, emb: DataFrame, queryVecId: Long, k: Int,
       nCentroids: Int = 16, nProbe: Int = 4, cacheKey: Option[String] = None): DataFrame = {
     val centroids = seedCentroids(emb, nCentroids, cacheKey)

@@ -33,14 +33,14 @@ object Winnow {
       .distinct()
   }
 
-  /** [[fingerprintFrame]] materialized through DfMemo keyed by the corpus
+  /** [[fingerprintFrame]] materialized through Memo.frame keyed by the corpus
     * dir: the index feeds BOTH `fingerprint_winnowing` (the audit rollup)
     * and [[matchSpans]] (candidate pairs) — without the memo each key
     * re-runs the shingle+winnow pass over the full corpus (the
     * shared-frame discipline of Dedup.memoizedSignatures). */
   def fingerprintFrameMemo(spark: org.apache.spark.sql.SparkSession,
       dir: String, docs: DataFrame, k: Int = 4, w: Int = 4): DataFrame =
-    DfMemo.cached(spark, Some(dir), s"winnow_fp:$k:$w") {
+    graft.Memo.frame(spark, Some(dir), s"winnow_fp:$k:$w") {
       fingerprintFrame(docs, k, w)
     }
 
@@ -56,7 +56,7 @@ object Winnow {
   def matchSpans(spark: org.apache.spark.sql.SparkSession, dir: String,
       docs: DataFrame, k: Int = 4, w: Int = 4, minRun: Int = 7,
       dfCap: Int = 16): DataFrame =
-    DfMemo.cached(spark, Some(dir), s"winnow_spans:$k:$w:$minRun:$dfCap") {
+    graft.Memo.frame(spark, Some(dir), s"winnow_spans:$k:$w:$minRun:$dfCap") {
       val fp = fingerprintFrameMemo(spark, dir, docs, k, w)
         .select("doc_id", "fp")
       val fpOk = fp.groupBy("fp").agg(count(lit(1)).as("df"))
@@ -67,11 +67,11 @@ object Winnow {
         .join(cand.select(col("fp"), col("doc_id").as("b_id")), "fp")
         .where(col("a_id") < col("b_id"))
         .select("a_id", "b_id").distinct()
-      // DfMemo: the positional gram frame feeds BOTH verification join
+      // Memo.frame: the positional gram frame feeds BOTH verification join
       // sides (a and b) — unmaterialized, the shingle+hash pass runs
       // twice (the memoizedSignatures double-compute trap; measured 2×
       // the key at sf1); persisted once, both sides read it
-      val grams = DfMemo.cached(spark, Some(dir), s"winnow_grams:$k:$minRun") {
+      val grams = graft.Memo.frame(spark, Some(dir), s"winnow_grams:$k:$minRun") {
         // opt-r15: positional per-window xxhash64 in ONE codegen pass —
         // the former shingles() + posexplode + xxhash64(g) materialized
         // every window string only to hash it (values bit-identical:
@@ -115,7 +115,7 @@ object Winnow {
   def coveredPositions(spark: org.apache.spark.sql.SparkSession, dir: String,
       docs: DataFrame, k: Int = 4, w: Int = 4, minRun: Int = 7,
       dfCap: Int = 16): DataFrame =
-    DfMemo.cached(spark, Some(dir), s"winnow_cov:$k:$w:$minRun:$dfCap") {
+    graft.Memo.frame(spark, Some(dir), s"winnow_cov:$k:$w:$minRun:$dfCap") {
       matchSpans(spark, dir, docs, k, w, minRun, dfCap)
         .select(col("b_id").as("doc_id"),
           explode(sequence(col("b_start").cast("long"),

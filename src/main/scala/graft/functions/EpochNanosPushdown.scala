@@ -30,7 +30,7 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   *    Cast's OWN embedded time zone is UTC: the zone is baked in at
   *    analysis time, so checking the session zone at optimization time
   *    would mis-rewrite a plan analyzed under another zone (e.g. one
-  *    cached by TableRegistry.dfCache before a zone change). Every graft
+  *    memoized by TableRegistry.table before a zone change). Every graft
   *    entry point pins UTC, so in practice the rule always fires.
   *  - `UnixMicros(ts: TimestampType)` — the shape left after
   *    SimplifyCasts removes a no-op cast (e.g. if a generator vintage

@@ -382,29 +382,6 @@ class ExtSpec extends SparkSpec {
     assert(am(4L) == 0L && am(12L) == 10L && am(33L) == 33L)
   }
 
-  test("DfMemo is re-entrant: a memoized build may itself hit the memo") {
-    import graft.ext.DfMemo
-    import spark.implicits._
-    // the old computeIfAbsent form died with "Recursive update" whenever a
-    // nested key landed in the outer key's hash bin (intermittent — bins
-    // depend on the session's identity hash); 64 nested keys make a bin
-    // collision near-certain, so this test is deterministic in practice
-    val out = DfMemo.cached(spark, Some("reentrant-outer"), "memo-test") {
-      val inners = (0 until 64).map { i =>
-        DfMemo.cached(spark, Some(s"reentrant-inner-$i"), "memo-test") {
-          Seq(i).toDF("v")
-        }
-      }
-      inners.reduce(_ unionAll _)
-    }
-    assert(out.count() == 64)
-    // and the memo actually memoizes: same handle back
-    val again = DfMemo.cached(spark, Some("reentrant-outer"), "memo-test") {
-      fail("must not rebuild"); null
-    }
-    assert(again eq out)
-  }
-
   test("ImageCodec decodes PngFixtures renders bit-exactly (dims, bands, sample sum)") {
     for (id <- Seq(0L, 7L, 123L, 499L)) {
       val rec = Multimodal.MediaRecord(id, "file/png", Multimodal.PngFixtures.render(id))
